@@ -399,12 +399,18 @@ def sidepath_aggregates(points: DataFrame, pairs: DataFrame) -> DataFrame:
     argmax_hw = (f"case when ({best_hw}) in ({', '.join(repr(h) for h in ranking)}) "
                  f"then ({best_hw}) end")
 
-    # mode name: array_min of (-cnt, name) = (count desc, name asc), nulls out
-    nm_keys = f"filter(array_distinct(transform(a, x -> x.nm)), k -> k <> '{_NULLK}')"
+    # mode name, as the kernel's dict max: count desc, ties to the name
+    # seen first — at the lowest pt_seq, then the lowest road id (the
+    # flagship's __iid, i.e. road input order).  NULL competes like any
+    # name; when it wins, no name is written.
+    nm_keys = "array_distinct(transform(a, x -> x.nm))"
     nm_cnt = ("size(array_distinct(filter(transform(a, x -> struct(x.pt, x.nm)),"
               " p -> p.nm = nk))) + 1")
-    mode_name = (f"array_min(transform({nm_keys}, nk -> "
-                 f"struct(-({nm_cnt}) as c, nk as nm))).nm")
+    nm_first = ("array_min(transform(filter(a, x -> x.nm = nk), "
+                "x -> struct(x.pt, x.rid)))")
+    mode_name = (f"nullif(array_min(transform({nm_keys}, nk -> "
+                 f"struct(-({nm_cnt}) as c, {nm_first} as f, nk as nm))).nm, "
+                 f"'{_NULLK}')")
 
     # per-highway max maxspeed map (array_max ignores NULL ms)
     ms_map = (f"map_from_entries(filter(transform({hw_keys}, hk -> "

@@ -35,14 +35,20 @@ properties made real instead of merely named:
   * **Bucketed data files** (the manifest-gated analog of an Iceberg
     bucket-partitioned table): ``bands/`` is one Spark bucketed table on
     ``bk`` and ``toks/`` one on ``doc_id``, both partitioned by a
-    ``batch`` string column, written via ``ops.bucketing.write_bucketed``;
-    the bucket count is pinned at index creation in a ``BUCKETS`` sidecar
-    so every later session reads/writes the recorded layout.
+    ``batch`` string column, written via ``ops.bucketing.write_bucketed``.
+    The bucket count is the creating session's ``defaultParallelism``,
+    pinned at the first data write in a ``BUCKETS`` sidecar so every
+    later session reads and writes the recorded layout whatever its own
+    core count.  Each batch's band and token frames are hash-partitioned
+    ONCE, into the pinned layout, and cached: ``HashPartitioning``
+    (Murmur3, ``pmod``) IS Spark's bucket-id function, so that one
+    batch-sized exchange feeds the batch band self-join, the index band
+    join and the bucketed write (about one file per bucket) with no
+    further Exchange.
     The per-batch band join therefore streams the index scan WITHOUT an
-    Exchange (only the small batch side shuffles, into the index's bucket
-    layout), and the verify join streams the bucketed ``toks/`` scan the
-    same way — the index is never shuffled, per plan audit
-    (tests/test_plan_audit.py::test_incremental_dedup_no_corpus_exchange).
+    Exchange on either side, and the verify join streams the bucketed
+    ``toks/`` scan the same way — the index is never shuffled, per
+    tests/test_plan_audit.py::test_incremental_dedup_no_corpus_exchange.
     On a real Iceberg deployment the engine additionally skips data FILES
     via the sorted buckets' min/max stats; plain parquet has no file-level
     join pruning, so each batch still reads (but never exchanges) the
@@ -81,14 +87,6 @@ from ..operators import dialect as D
 from ..ops.bucketing import write_bucketed
 
 _MIXM = (1 << 31) - 1
-# bucket count for NEW persisted indexes.  Caps the no-exchange band and
-# verify joins' task count (buckets cannot be split), so it tracks the
-# deployment's core count — env knob for the scaling protocol; at 100 TB
-# this is hundreds-to-thousands.  Set ONCE at index creation and pinned
-# in the index's BUCKETS sidecar: existing files are hashed into their
-# recorded bucket count, so later sessions must keep reading/writing that
-# layout regardless of their own env value (_index_buckets).
-N_BUCKETS = int(os.environ.get("SPARK_GRAFT_INDEX_BUCKETS", "32"))
 
 
 def _sig_cols() -> list:
@@ -185,20 +183,48 @@ _BANDS_DDL_COLS = ("doc_id BIGINT, nt INT, band_idx INT, bk BIGINT, "
 _TOKS_DDL_COLS = "doc_id BIGINT, toks ARRAY<STRING>"
 
 
-def _index_buckets(index_dir: str) -> int:
-    """The index's bucket count, pinned AT CREATION in a sidecar file:
-    files are hashed into buckets once, so a session whose env knob
-    differs must keep reading/writing the recorded layout — registering
-    the wrong count would silently mis-co-locate every join."""
+def _default_buckets(spark) -> int:
+    """Bucket count for a NEW index: one per core of the creating
+    session.  Buckets cannot be split, so this caps the no-exchange joins'
+    task count; each bucket costs one file per table per batch."""
+    return spark.sparkContext.defaultParallelism
+
+
+def _index_buckets(spark, index_dir: str, create: bool = False) -> int:
+    """The index's bucket count: the one pinned in its ``BUCKETS``
+    sidecar, else (a new index) ``_default_buckets``, written to the
+    sidecar only when ``create`` — at the first data write, so an
+    uncommitted look at a new index leaves no files behind.  Files are
+    hashed into buckets once: a later session with another core count
+    must keep the recorded layout, since registering a different count
+    would silently mis-co-locate every join.  Data directories without a
+    sidecar have an unknown layout, so they raise instead of being
+    re-pinned to this session's count."""
     path = os.path.join(index_dir, "BUCKETS")
     try:
         with open(path, encoding="ascii") as fh:
             return int(fh.read().strip())
     except FileNotFoundError:
+        pass
+    orphans = [sub for sub in ("bands", "toks")
+               if os.path.isdir(os.path.join(index_dir, sub))]
+    if orphans:
+        raise RuntimeError(
+            f"{index_dir}: {' and '.join(orphans)} hold index data but the "
+            f"BUCKETS sidecar is missing, so their bucket layout is unknown; "
+            f"restore the sidecar or start a new index")
+    nb = _default_buckets(spark)
+    if create:
         os.makedirs(index_dir, exist_ok=True)
-        with open(path, "w", encoding="ascii") as fh:
-            fh.write(str(N_BUCKETS))
-        return N_BUCKETS
+        with open(path + ".tmp", "w", encoding="ascii") as fh:
+            fh.write(str(nb))
+        os.replace(path + ".tmp", path)  # atomic, like the manifest
+    return nb
+
+
+def _sql_str(value: str) -> str:
+    """``value`` as a single-quoted Spark SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _ensure_tables(spark, index_dir: str) -> tuple[str, str, int]:
@@ -207,7 +233,7 @@ def _ensure_tables(spark, index_dir: str) -> tuple[str, str, int]:
     the resume-from-a-fresh-session path.  recoverPartitions re-discovers
     every attempt partition directory; visibility stays manifest-gated."""
     bands_tbl, toks_tbl = _table_names(index_dir)
-    nb = _index_buckets(index_dir)
+    nb = _index_buckets(spark, index_dir, create=True)
     for tbl, sub, cols, key in (
             (bands_tbl, "bands", _BANDS_DDL_COLS, "bk"),
             (toks_tbl, "toks", _TOKS_DDL_COLS, "doc_id")):
@@ -218,7 +244,7 @@ def _ensure_tables(spark, index_dir: str) -> tuple[str, str, int]:
             f"CREATE TABLE {tbl} ({cols}, batch STRING) USING PARQUET "
             f"PARTITIONED BY (batch) "
             f"CLUSTERED BY ({key}) SORTED BY ({key}) "
-            f"INTO {nb} BUCKETS LOCATION '{loc}'")
+            f"INTO {nb} BUCKETS LOCATION {_sql_str(loc)}")
         spark.catalog.recoverPartitions(tbl)
     return bands_tbl, toks_tbl, nb
 
@@ -256,27 +282,30 @@ def _next_attempt_part(index_dir: str, stem: str) -> str:
     return f"{stem}-a{nxt}"
 
 
+def _in_layout(toks_df: DataFrame, bands_df: DataFrame,
+               nb: int) -> tuple[DataFrame, DataFrame]:
+    """(toks, bands) hash-partitioned into the index's ``nb``-bucket
+    layout on doc_id / bk: each task then holds exactly one bucket, so a
+    bucketed write lands about one file per bucket (unpartitioned, every
+    input task writes its own file per bucket it sees, tasks × buckets
+    small files), and a join against the bucketed index needs no
+    Exchange."""
+    return (toks_df.repartition(nb, "doc_id"),
+            bands_df.repartition(nb, "bk"))
+
+
 def _write_attempt(spark, toks_df: DataFrame, bands_df: DataFrame,
                    index_dir: str, part: str) -> None:
     """Land bucketed data files in attempt partition `part` of each index
-    table.  The partition stays INVISIBLE until a manifest rewrite
-    publishes it — a crash here leaves only dead files."""
+    table; the frames should already be ``_in_layout``.  The partition
+    stays INVISIBLE until a manifest rewrite publishes it — a crash here
+    leaves only dead files."""
     bands_tbl, toks_tbl, nb = _ensure_tables(spark, index_dir)
-
-    def clustered(df: DataFrame, key: str) -> DataFrame:
-        # pre-shuffle into the bucket layout (pmod(hash, n) IS Spark's
-        # bucket-id function): without this every input task writes its
-        # own file per bucket it sees — tasks × buckets small files per
-        # batch, and the measured 2x wall on the whole operator.  One
-        # batch-sized exchange caps it at ~one file per bucket.
-        return df.repartition(nb, F.expr(f"pmod(hash({key}), {nb})"))
-
-    write_bucketed(clustered(bands_df, "bk").withColumn("batch", F.lit(part)),
+    write_bucketed(bands_df.withColumn("batch", F.lit(part)),
                    bands_tbl, "bk", nb,
                    path=os.path.join(index_dir, "bands"),
                    partition_by="batch", mode="append")
-    write_bucketed(clustered(toks_df, "doc_id")
-                   .withColumn("batch", F.lit(part)),
+    write_bucketed(toks_df.withColumn("batch", F.lit(part)),
                    toks_tbl, "doc_id", nb,
                    path=os.path.join(index_dir, "toks"),
                    partition_by="batch", mode="append")
@@ -310,13 +339,15 @@ def _annotate(toks_new: DataFrame, bands_new: DataFrame,
     from the driver so the plan audit can explain() it pre-checkpoint.
 
     Join shape at scale: band collisions are ONE equi-join per source on
-    the fused ``bk`` — the batch self-join shuffles only batch rows, and
-    the index join streams the bucketed index scan with NO Exchange (the
-    shuffle_hash hint pins the batch side as build, which also forbids the
-    planner from broadcasting the unbounded index when a small-SF size
-    estimate would otherwise tempt it).  The size-ratio prefilter +
-    first-band-owner conjunct run inside the band joins exactly as in the
-    graded corpus-at-once query.  Verify fetches token arrays for
+    the fused ``bk``.  The batch frames arrive cached in the index's
+    bucket layout (``_batch_frames``), so neither the batch self-join nor
+    the index join adds an Exchange: the index join streams the bucketed
+    index scan against the co-partitioned batch (the shuffle_hash hint
+    pins the batch side as build, which also forbids the planner from
+    broadcasting the unbounded index when a small-SF size estimate would
+    otherwise tempt it).  The size-ratio prefilter + first-band-owner
+    conjunct run inside the band joins exactly as in the graded
+    corpus-at-once query.  Verify fetches token arrays for
     candidate ids only: batch-mate candidates against the in-memory batch
     toks, index candidates against the bucketed ``toks/`` scan (again
     exchange-free on the index side), then the Jaccard arithmetic runs on
@@ -392,6 +423,16 @@ def _annotate(toks_new: DataFrame, bands_new: DataFrame,
                         "m.jaccard as jaccard"))
 
 
+def _batch_frames(spark, batch_docs: DataFrame,
+                  index_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The batch's (toks, bands), ``_in_layout`` of the index's pinned
+    bucket count and persisted, for the band joins and the bucketed
+    write to share (module docstring).  The caller unpersists."""
+    toks, bands = _in_layout(*band_frames(batch_docs),
+                             _index_buckets(spark, index_dir))
+    return toks.persist(), bands.persist()
+
+
 def incremental_dedup_batch(spark, batch_docs: DataFrame, index_dir: str,
                             batch_id: int, commit: bool = True) -> DataFrame:
     """One incoming batch vs the persisted index -> per-doc annotations.
@@ -404,9 +445,7 @@ def incremental_dedup_batch(spark, batch_docs: DataFrame, index_dir: str,
     bucketed data files into a fresh attempt partition, then one atomic
     manifest rename — so a crash anywhere leaves every previously
     committed batch intact and readable (module docstring)."""
-    toks_new, bands_new = band_frames(batch_docs)
-    toks_new = toks_new.persist()
-    bands_new = bands_new.persist()
+    toks_new, bands_new = _batch_frames(spark, batch_docs, index_dir)
     try:
         seen_bands, seen_toks = _seen_frames(spark, index_dir)
         best = _annotate(toks_new, bands_new, seen_bands, seen_toks)
@@ -485,7 +524,9 @@ def compact_index(spark, index_dir: str) -> dict:
     toks = spark.read.parquet(
         *[os.path.join(index_dir, "toks", f"batch={p}") for p in parts])
     part = _next_attempt_part(index_dir, "compact")
-    _write_attempt(spark, toks, bands, index_dir, part)
+    _write_attempt(spark, *_in_layout(toks, bands,
+                                      _index_buckets(spark, index_dir)),
+                   index_dir, part)
     n_docs = sum(int(e["n_docs"]) for e in entries)
     _write_manifest(index_dir, [{
         "batch_id": -1, "part": part, "n_docs": n_docs,
@@ -526,7 +567,7 @@ def vacuum_index(spark, index_dir: str) -> dict:
             shutil.rmtree(os.path.join(base, d), ignore_errors=True)
             if spark.catalog.tableExists(tbl):
                 spark.sql(f"ALTER TABLE {tbl} DROP IF EXISTS "
-                          f"PARTITION (batch='{part}')")
+                          f"PARTITION (batch={_sql_str(part)})")
             removed.append(f"{sub}/{d}")
     for tbl in (bands_tbl, toks_tbl):
         if spark.catalog.tableExists(tbl):

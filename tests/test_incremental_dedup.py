@@ -200,29 +200,35 @@ def test_crash_rerunning_committed_batch_leaves_it_intact(spark, tmp_path):
 
 
 def test_batch_write_file_count_bounded_by_buckets(spark, tmp_path):
-    """Regression guard for the bucketed-write fan-out: without the
-    pre-shuffle into the bucket layout, every input task writes its own
-    file per bucket it sees — tasks x buckets files per batch (measured
-    2x wall on the whole operator).  Each committed attempt partition
-    must hold at most N_BUCKETS data files per table."""
-    from cqi_engine.streaming.dedup import (N_BUCKETS, committed_batches,
+    """Regression guard for the bucketed-write fan-out: without the batch
+    frames pre-shuffled into the bucket layout, every input task writes
+    its own file per bucket it sees — tasks x buckets files per batch
+    (measured 2x wall on the whole operator).  A new index pins one
+    bucket per core of its session, and each committed attempt partition
+    must hold at most that many data files per table."""
+    from cqi_engine.streaming.dedup import (_index_buckets,
+                                            committed_batches,
                                             incremental_dedup_batch)
     docs = _docs(spark)
     ix = str(tmp_path / "ix")
     incremental_dedup_batch(spark, docs.filter("doc_id < 250"), ix, 0)
+    pinned = _index_buckets(spark, ix)
+    assert pinned == spark.sparkContext.defaultParallelism
+    with open(os.path.join(ix, "BUCKETS"), encoding="ascii") as fh:
+        assert int(fh.read()) == pinned
     [entry] = committed_batches(ix)
     for sub in ("bands", "toks"):
         d = os.path.join(ix, sub, f"batch={entry['part']}")
         files = [f for f in os.listdir(d) if f.endswith(".parquet")]
-        assert 0 < len(files) <= N_BUCKETS, (sub, len(files))
+        assert 0 < len(files) <= pinned, (sub, len(files))
 
 
 def test_bucket_count_pinned_at_index_creation(spark, tmp_path, monkeypatch):
-    """The BUCKETS sidecar wins over a later session's env knob: files
+    """The BUCKETS sidecar wins over a later session's default: files
     are hashed into buckets once, so batch 2 must keep the creation-time
-    layout even when N_BUCKETS has changed — otherwise the bucketed scan
-    metadata would mis-describe the files and joins would silently
-    mis-co-locate."""
+    layout even when the session's default bucket count has changed —
+    otherwise the bucketed scan metadata would mis-describe the files and
+    joins would silently mis-co-locate."""
     from cqi_engine.streaming import dedup
 
     docs = _docs(spark)
@@ -230,21 +236,96 @@ def test_bucket_count_pinned_at_index_creation(spark, tmp_path, monkeypatch):
     b1 = docs.filter("doc_id < 250")
     b2 = docs.filter("doc_id >= 250")
     dedup.incremental_dedup_batch(spark, b1, ix, 0)
-    pinned = dedup._index_buckets(ix)
+    pinned = dedup._index_buckets(spark, ix)
 
     want = _run_batches(spark, _docs(spark), str(tmp_path / "ix_ref"),
                         [(0, 250), (250, 10**9)])
 
-    monkeypatch.setattr(dedup, "N_BUCKETS", pinned * 2)
+    # a later session with twice the cores
+    monkeypatch.setattr(dedup, "_default_buckets", lambda _s: pinned * 2)
     got1 = sorted(map(tuple,
                       dedup.incremental_dedup_batch(spark, b2, ix, 1)
                       .collect()))
-    assert dedup._index_buckets(ix) == pinned  # sidecar untouched
+    assert dedup._index_buckets(spark, ix) == pinned  # sidecar untouched
     [_, entry1] = dedup.committed_batches(ix)
-    d = os.path.join(ix, "bands", f"batch={entry1['part']}")
-    files = [f for f in os.listdir(d) if f.endswith(".parquet")]
-    assert len(files) <= pinned  # batch 2 wrote the PINNED layout
+    for sub in ("bands", "toks"):
+        d = os.path.join(ix, sub, f"batch={entry1['part']}")
+        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
+        assert len(files) <= pinned  # batch 2 wrote the PINNED layout
     assert got1 == [t for t in want if t[0] >= 250]
+
+
+def test_buckets_sidecar_written_atomically(spark, tmp_path, monkeypatch):
+    """BUCKETS goes through tmp + rename, like the manifest: a crash
+    before the rename leaves no sidecar at all, never a torn one."""
+    from cqi_engine.streaming import dedup
+
+    ix = str(tmp_path / "ix")
+
+    def crash(src, dst):
+        raise OSError("crash before rename")
+
+    with monkeypatch.context() as m:
+        m.setattr(dedup.os, "replace", crash)
+        with pytest.raises(OSError, match="crash before rename"):
+            dedup._index_buckets(spark, ix, create=True)
+    assert not os.path.exists(os.path.join(ix, "BUCKETS"))
+
+    nb = dedup._index_buckets(spark, ix, create=True)
+    assert sorted(os.listdir(ix)) == ["BUCKETS"]
+    with open(os.path.join(ix, "BUCKETS"), encoding="ascii") as fh:
+        assert int(fh.read()) == nb
+
+
+def test_missing_buckets_sidecar_with_data_raises(spark, tmp_path):
+    """Index data without its BUCKETS sidecar has an unknown layout: the
+    next batch must fail loudly instead of re-pinning the session's
+    default over files hashed into another count."""
+    from cqi_engine.streaming.dedup import incremental_dedup_batch
+
+    docs = _docs(spark)
+    ix = str(tmp_path / "ix")
+    incremental_dedup_batch(spark, docs.filter("doc_id < 250"), ix, 0)
+    os.remove(os.path.join(ix, "BUCKETS"))
+    with pytest.raises(RuntimeError, match="BUCKETS sidecar is missing"):
+        incremental_dedup_batch(spark, docs.filter("doc_id >= 250"), ix, 1)
+    assert not os.path.exists(os.path.join(ix, "BUCKETS"))
+
+
+def test_uncommitted_batch_on_new_index_writes_no_files(spark, tmp_path):
+    """commit=False on a new index is a pure read: it pins nothing, so
+    the index directory is never created."""
+    from cqi_engine.streaming.dedup import incremental_dedup_batch
+
+    ix = tmp_path / "ix"
+    incremental_dedup_batch(spark, _docs(spark).filter("doc_id < 250"),
+                            str(ix), 0, commit=False).collect()
+    assert not ix.exists()
+
+
+def test_index_dir_with_quote_in_path(spark, tmp_path):
+    """The index path reaches Spark SQL in the tables' LOCATION and the
+    partition names in vacuum's DROP PARTITION: a single quote in either
+    must be escaped, not break (or inject into) the statement."""
+    from cqi_engine.streaming import dedup
+
+    docs = _docs(spark)
+    ix = str(tmp_path / "it's" / "ix")
+    b1 = docs.filter("doc_id < 250")
+    dedup.incremental_dedup_batch(spark, b1, ix, 0)
+    got = (dedup.incremental_dedup_batch(spark, b1, ix, 0)  # a0 now dead
+           .unionByName(dedup.incremental_dedup_batch(
+               spark, docs.filter("doc_id >= 250"), ix, 1)))
+    want = _run_batches(spark, docs, str(tmp_path / "ref"),
+                        [(0, 250), (250, 10**9)])
+    assert sorted(map(tuple, got.collect())) == want
+
+    for sub in ("bands", "toks"):  # a stray partition named with a quote
+        os.makedirs(os.path.join(ix, sub, "batch=it's-dead"))
+    out = dedup.vacuum_index(spark, ix)
+    assert sorted(out["removed"]) == sorted(
+        f"{sub}/batch={p}" for sub in ("bands", "toks")
+        for p in ("000000-a0", "it's-dead"))
 
 
 def test_compact_index_preserves_decisions(spark, tmp_path):
@@ -274,7 +355,7 @@ def test_compact_index_preserves_decisions(spark, tmp_path):
     assert entry["n_docs"] == sum(
         len(a.collect()) for a in anns)
 
-    pinned = dedup._index_buckets(ix)
+    pinned = dedup._index_buckets(spark, ix)
     d = os.path.join(ix, "bands", f"batch={entry['part']}")
     files = [f for f in os.listdir(d) if f.endswith(".parquet")]
     assert 0 < len(files) <= pinned

@@ -286,12 +286,15 @@ def test_incremental_dedup_no_corpus_exchange(spark, tmp_path):
     """The round-4 verdict's one scale caveat, closed: the persisted
     incremental-dedup index is a bucketed layout (bands/ on the fused bk,
     toks/ on doc_id), so the per-batch band join and the verify join must
-    stream the index scans WITHOUT any Exchange above them — only the
-    batch-derived side shuffles.  An Exchange (or BroadcastExchange)
-    whose subtree contains an incdedup_* table scan is the O(corpus)
-    per-batch shuffle/broadcast pathology this layout exists to kill."""
-    from cqi_engine.streaming.dedup import (_annotate, _seen_frames,
-                                            band_frames,
+    stream the index scans WITHOUT any Exchange above them.  An Exchange
+    (or BroadcastExchange) whose subtree contains an incdedup_* table scan
+    is the O(corpus) per-batch shuffle/broadcast pathology this layout
+    exists to kill.  The batch side is shuffled once, into the index's
+    bucket layout, before it is cached: the cached band frame must reach
+    both band joins without a second Exchange, and the verify joins that
+    fetch the cached batch token arrays must never sort-merge them."""
+    from cqi_engine.streaming.dedup import (_annotate, _batch_frames,
+                                            _seen_frames,
                                             incremental_dedup_batch)
 
     docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -299,10 +302,20 @@ def test_incremental_dedup_no_corpus_exchange(spark, tmp_path):
     ix = str(tmp_path / "ix")
     incremental_dedup_batch(spark, docs.filter("doc_id < 250"), ix, 0)
 
-    toks_new, bands_new = band_frames(docs.filter("doc_id >= 250"))
+    toks_new, bands_new = _batch_frames(spark, docs.filter("doc_id >= 250"),
+                                        ix)
+    # materialized first, as they are by the time adaptive execution
+    # plans the joins in incremental_dedup_batch: before that a cached
+    # plan's partitioning is unknown to the planner
+    toks_new.count()
+    bands_new.count()
     seen_bands, seen_toks = _seen_frames(spark, ix)
-    plan = _simple_plan(
-        _annotate(toks_new, bands_new, seen_bands, seen_toks))
+    try:
+        plan = _simple_plan(
+            _annotate(toks_new, bands_new, seen_bands, seen_toks))
+    finally:
+        toks_new.unpersist()
+        bands_new.unpersist()
 
     # bucketed scans active on both index tables (bands: band join;
     # toks: verify join) — "Bucketed: false" means the layout regressed
@@ -323,15 +336,43 @@ def test_incremental_dedup_no_corpus_exchange(spark, tmp_path):
     def depth(ln: str) -> int:
         return len(ln) - len(ln.lstrip(" :+-*("))
 
-    for i, ln in enumerate(lines):
-        if "incdedup_" not in ln or "FileScan" not in ln:
-            continue
-        d = depth(ln)
+    def path_to_join(i: int) -> list[str]:
+        """Ancestors of line i up to and including the first Join."""
+        d, out = depth(lines[i]), []
         for j in range(i - 1, -1, -1):  # ancestors: closest smaller depth
             if not lines[j].strip() or depth(lines[j]) >= d:
                 continue
             d = depth(lines[j])
+            out.append(lines[j])
             if "Join" in lines[j]:
-                break
-            assert "Exchange" not in lines[j], (
-                f"index scan shuffled before its join:\n{lines[j]}\n{ln}")
+                return out
+        raise AssertionError(f"no join above:\n{lines[i]}\n{plan}")
+
+    def scans_of(*needles: str) -> list[int]:
+        return [i for i, ln in enumerate(lines)
+                if all(n in ln for n in needles)]
+
+    for i in scans_of("FileScan", "incdedup_"):
+        for ln in path_to_join(i)[:-1]:
+            assert "Exchange" not in ln, (
+                f"index scan shuffled before its join:\n{ln}\n{lines[i]}")
+
+    # the cached batch bands: both sides of the batch self-join and the
+    # batch side of the index join
+    band_scans = scans_of("InMemoryTableScan", " bk#")
+    assert len(band_scans) == 3, plan
+    for i in band_scans:
+        up = path_to_join(i)
+        assert "ShuffledHashJoin" in up[-1] and "[bk#" in up[-1], up[-1]
+        for ln in up[:-1]:
+            assert "Exchange" not in ln, (
+                f"cached batch bands shuffled again:\n{ln}\n{lines[i]}")
+
+    # the cached batch token arrays: both fetches of verify_self and the
+    # batch side of verify_index
+    tok_scans = scans_of("InMemoryTableScan", " toks#")
+    assert len(tok_scans) == 3, plan
+    for i in tok_scans:
+        join = path_to_join(i)[-1]
+        assert "SortMergeJoin" not in join, (
+            f"batch token arrays sort-merged:\n{join}")

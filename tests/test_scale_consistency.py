@@ -12,6 +12,20 @@ import json
 import subprocess
 import sys
 
+
+def _run_child(*argv: str) -> None:
+    """Run ``python -c <runner> <args>`` in a fresh interpreter.  On a
+    non-zero exit the assertion shows the child's Python traceback (from
+    its first ``Traceback`` line on), not the tail of Spark's log."""
+    proc = subprocess.run([sys.executable, "-c", *argv], timeout=600,
+                          stdout=subprocess.DEVNULL, stderr=subprocess.PIPE,
+                          text=True)
+    tb = proc.stderr.find("Traceback (most recent call last)")
+    assert proc.returncode == 0, (
+        f"runner exited {proc.returncode}:\n"
+        + (proc.stderr[tb:tb + 8000] if tb >= 0 else proc.stderr[-4000:]))
+
+
 _RUNNER = r"""
 import json, sys
 sys.path.insert(0, "/root/repo")
@@ -37,9 +51,7 @@ spark.stop()
 
 
 def _scored_rows(master: str, out_path: str) -> dict:
-    subprocess.run([sys.executable, "-c", _RUNNER, master, out_path],
-                   check=True, timeout=600,
-                   stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
+    _run_child(_RUNNER, master, out_path)
     with open(out_path, encoding="utf-8") as fh:
         return json.load(fh)
 
@@ -76,9 +88,7 @@ spark.stop()
 
 
 def _catalog_rows(master: str, out_path: str) -> dict:
-    subprocess.run([sys.executable, "-c", _CATALOG_RUNNER, master, out_path],
-                   check=True, timeout=600,
-                   stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
+    _run_child(_CATALOG_RUNNER, master, out_path)
     with open(out_path, encoding="utf-8") as fh:
         return json.load(fh)
 
@@ -127,9 +137,7 @@ def test_flagship_digest_parity_at_sf01(tmp_path):
     one scale decade up, where partitioning/salting paths actually fan
     out (64 shuffle partitions over ~25k pages)."""
     out = str(tmp_path / "sf01.json")
-    subprocess.run([sys.executable, "-c", _SF01_RUNNER, out],
-                   check=True, timeout=600,
-                   stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
+    _run_child(_SF01_RUNNER, out)
     with open(out, encoding="utf-8") as fh:
         res = json.load(fh)
     assert res["rows"] == 5926
@@ -165,15 +173,9 @@ def test_incremental_dedup_identical_across_parallelism(tmp_path):
     bucketed index layout, the band/verify join shapes, and the
     min-struct tie-breaking may not let executor count leak into
     keep/drop decisions."""
-    import subprocess
-    import sys
-
     def run(master, out):
-        subprocess.run([sys.executable, "-c", _INCDEDUP_RUNNER,
-                        master, out], check=True, timeout=600,
-                       stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
+        _run_child(_INCDEDUP_RUNNER, master, out)
         with open(out, encoding="utf-8") as fh:
-            import json
             return json.load(fh)
 
     a = run("local[2]", str(tmp_path / "a.json"))

@@ -66,7 +66,11 @@ def test_spark_submit_py_files_launch(tmp_path):
          "--input", SF_DIR, "--output", str(out)],
         capture_output=True, text=True, timeout=420, cwd=tmp_path,
     )
-    assert proc.returncode == 0, proc.stderr[-4000:]
+    # the job's Python traceback, not the tail of Spark's INFO log;
+    # spark-submit relays the Python driver's stderr on its own stdout
+    tb = proc.stdout.find("Traceback (most recent call last)")
+    assert proc.returncode == 0, (
+        proc.stdout[tb:tb + 8000] if tb >= 0 else proc.stderr[-4000:])
     assert "scored_rows=590" in proc.stdout, proc.stdout[-2000:]
 
     # Independent read-back (duckdb, no Spark): full score schema, sane values.
